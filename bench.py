@@ -14,7 +14,7 @@ Two classes of measurement:
     top-10 over a deterministic synthetic 1M x 768-d table
     (FIXTURES.md §6 ``laion_bench`` shape), scored by the scan-side
     Arrow+BLAS path (knn_search_parquet — exact, parity-tested
-    against the codegen path). BASELINE.md's slowest brute-force row
+    against knn_search). BASELINE.md's slowest brute-force row
     is 10.272 s for 10M rows x 768-d; scaled linearly to 1M rows the
     reference-equivalent is ~1.03 s, so the 2x contract target is
     <= ~2.05 s (>= ~487k rows/s).
@@ -1944,12 +1944,10 @@ def main() -> None:
         # neighbor CPU contention; best-of-N is the contention-resistant
         # throughput bound, the median the honest typical case.
         variants = [("scan", "knn768")]
-        if os.environ.get("SPARK_GRAFT_BENCH_CODEGEN"):  # JVM expression path
-            variants.append(("codegen", "knn768_codegen"))  # ~6s/200k: opt-in
         if os.environ.get("SPARK_GRAFT_BENCH_ARROW"):  # opt-in: can run 10+ min
             variants.append(("arrow", "knn768_arrow"))  # under host contention
         for impl, key in variants:
-            run_knn(impl)  # warm (codegen compile / python workers)
+            run_knn(impl)  # warm (python workers)
             ts = sorted(timed(lambda: run_knn(impl)) for _ in range(5))
             queries[key] = ts[2]
             extras[f"{key}_best_sec"] = ts[0]

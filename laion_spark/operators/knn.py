@@ -4,37 +4,42 @@ Reference shape (search.py:20-35):
     SELECT url, caption, L2Distance(<emb>, <qvec>) AS score
     FROM <table> [WHERE <filter>] ORDER BY score ASC LIMIT <k>
 
-Plan (both implementations share it):
+Plan (both scorers share it):
     ParquetScan(pruned columns, pushed filters)
       -> Filter(<filter>)            # cheap predicate BELOW scoring
-      -> score projection            # see impl note below
+      -> score                       # see the two scorers below
       -> TakeOrderedAndProject(k)    # per-partition top-k + k-row
                                      # reduce; NO global sort, NO
                                      # data-row shuffle
       -> Project(score = sqrt(s2))   # sqrt on the k survivors only
 
-Implementation note (measured, not guessed — see BENCH): Catalyst's
-higher-order array functions (``zip_with``/``aggregate``) are evaluated
-interpreted, element-at-a-time with boxing — ~25k el/s/core at
-dim=768, which is 3-4 orders of magnitude off the reference's
-10-48M rows/s scan rate. So, three scorers:
+Two scorers:
 
-  - ``impl="codegen"`` (default for literal query vectors up to dim
-    2048): the distance is unrolled into per-element ``element_at``
-    expressions, chunk-summed so every generated method stays under
-    HotSpot's JIT ceiling — the whole score evaluates inside one
-    WholeStageCodegen span, JVM-only. Stable ~44-80M el/s measured;
-    never touches the Python boundary, so it is immune to the
-    JVM<->Python transfer degradation observed under host contention
-    (up to 30x on shared VMs).
-  - ``impl="arrow"``: a ``mapInArrow`` scorer — Arrow record batches
-    flattened zero-copy into an (n x dim) numpy matrix, distances via
-    BLAS-grade vectorized ops, (ids..., score) batches returned. Fully
-    distributed and partition-local; the fallback for very high dims
-    where the unrolled plan gets expensive to compile.
-  - ``impl="hof"``: the pure-Catalyst HOF path. Correctness twin for
-    the oracle, and the only path for column-valued (non-literal)
-    query vectors (concept math over columns).
+  - ``impl="arrow"`` (default for a literal query vector): one
+    ``mapInArrow`` operator — Arrow record batches flattened zero-copy
+    into an (n x dim) numpy matrix, distances by vectorized numpy,
+    (cols..., score) batches returned. Partition-local, no shuffle.
+  - ``impl="hof"``: pure Catalyst higher-order functions
+    (``zip_with``/``aggregate``). The only path for a Column-valued
+    query vector (concept math over columns), and the correctness twin
+    the tests compare against.
+
+Why Arrow is the default: its plan is the same few nodes at any dim,
+so a new query literal costs no planning. The scorer it replaced
+unrolled the distance into one ``element_at`` expression per
+dimension, which Py4J had to build and Catalyst/Janino to recompile
+for every query literal. Measured on 4 cores, warm, top-10 L2 over a
+768-d float32 table with a filter keeping half the rows:
+
+    rows   scorer    plan          collect
+    8k     unrolled  4.0-5.3 s     2.4-3.8 s
+    8k     arrow     52-53 ms      0.51-0.67 s
+    8k     hof       0.32-0.37 s   0.30-0.36 s
+    250k   unrolled  3.9-5.4 s     9.0-9.7 s
+    250k   arrow     67-83 ms      2.3-2.8 s
+    250k   hof       0.34-0.40 s   4.2-4.4 s
+
+Every scorer returned the same top-k at the round(6) grain.
 
 The monotonic-distance rewrite (sort on squared distance, sqrt after
 the limit) and filter-before-score ordering are constructed here
@@ -55,16 +60,6 @@ from laion_spark.functions.vector import (
 )
 
 _METRICS = {"l2", "cosine", "dot"}
-
-#: above this dim the unrolled-expression plan gets expensive to build
-#: and compile on the driver; fall back to the Arrow scorer
-_CODEGEN_DIM_LIMIT = 2048
-
-#: terms per generated sub-expression: small enough that each generated
-#: method stays under HotSpot's ~8 KB bytecode JIT ceiling (a single
-#: 768-term expression compiles but runs in the bytecode INTERPRETER,
-#: ~4x slower measured)
-_CODEGEN_CHUNK = 48
 
 #: above this many (file, row_group) splits the scan scorer ships the
 #: task table through a tiny shuffle instead of the task closure — the
@@ -87,9 +82,10 @@ def knn_search(
 ) -> DataFrame:
     """Brute-force exact top-k nearest neighbors.
 
-    ``tiebreak`` columns make the result total-ordered (needed for
-    cross-engine comparison; the reference's ORDER BY score alone is
-    ambiguous on ties).
+    ``impl``: ``"auto"`` (Arrow scorer for a literal query vector, HOF
+    for a Column), ``"arrow"`` or ``"hof"``. ``tiebreak`` columns make
+    the result total-ordered (needed for cross-engine comparison; the
+    reference's ORDER BY score alone is ambiguous on ties).
     """
     if metric not in _METRICS:
         raise ValueError(f"metric must be one of {_METRICS}, got {metric!r}")
@@ -99,16 +95,14 @@ def knn_search(
 
     is_literal_q = not isinstance(query_vec, Column)
     if impl == "auto":
-        impl = "codegen" if (is_literal_q and len(query_vec) <= _CODEGEN_DIM_LIMIT) else (
-            "arrow" if is_literal_q else "hof"
-        )
-    if impl in ("arrow", "codegen") and not is_literal_q:
-        raise ValueError(f"impl={impl!r} requires a literal query vector")
+        impl = "arrow" if is_literal_q else "hof"
+    if impl not in ("arrow", "hof"):
+        raise ValueError(f"impl must be one of 'auto', 'arrow', 'hof', got {impl!r}")
+    if impl == "arrow" and not is_literal_q:
+        raise ValueError("impl='arrow' requires a literal query vector")
 
     if impl == "arrow":
         scored = _arrow_scored(df, list(query_vec), vector_col, cols, metric)
-    elif impl == "codegen":
-        scored = _codegen_scored(df, list(query_vec), vector_col, cols, metric)
     else:
         q = vec_lit(query_vec) if is_literal_q else query_vec
         if metric == "l2":
@@ -137,80 +131,6 @@ def _finish_topk(
     order += [F.col(c).asc() for c in tiebreak]
     topk = scored.orderBy(*order).limit(k)
     return topk.withColumn(score_col, finish).drop("_raw")
-
-
-def _tree_sum(terms: list[Column]) -> Column:
-    """Balanced-tree sum: expression depth log2(n) (a left-assoc chain
-    of 768 adds nests generated code 768 deep). Summation order differs
-    from a linear fold by ~1 ulp — canonicalized away by the round(6)
-    comparison grain (SURVEY.md hard part #2), same as the numpy
-    pairwise reduction in the Arrow path."""
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def _codegen_scored(
-    df: DataFrame,
-    qvec: list[float],
-    vector_col: str,
-    cols: Sequence[str],
-    metric: str,
-) -> DataFrame:
-    """Pure-JVM scorer: the distance against a literal query vector is
-    unrolled into per-element expressions (`element_at` is O(1) on the
-    columnar array) and summed in ~16-term chunks projected as
-    intermediate columns, so every generated method stays JIT-compiled
-    inside one WholeStageCodegen span. No Python boundary, no Arrow
-    ser/de of the embedding column — the scan reads (id cols +
-    vector), scores in registers, and only k rows ever leave the stage.
-
-    Measured (BENCH, 200k x 768, local[32]): stable ~44-80M el/s/query;
-    the mapInArrow path peaks similarly but its JVM<->Python socket hop
-    degrades up to 30x under host CPU contention, so this is the
-    default for literal queries."""
-    e = F.col(vector_col)
-    if metric == "l2":
-
-        def sq_diff(j: int, qj: float) -> Column:
-            d = F.element_at(e, j + 1).cast("double") - F.lit(float(qj))
-            return d * d
-
-        chunk_sets = {"_d": [sq_diff(j, qj) for j, qj in enumerate(qvec)]}
-    elif metric == "dot":
-        chunk_sets = {
-            "_d": [F.element_at(e, j + 1).cast("double") * F.lit(float(qj)) for j, qj in enumerate(qvec)]
-        }
-    else:  # cosine: dot / (|a| * |q|)
-        chunk_sets = {
-            "_d": [F.element_at(e, j + 1).cast("double") * F.lit(float(qj)) for j, qj in enumerate(qvec)],
-            "_n": [
-                F.element_at(e, j + 1).cast("double") * F.element_at(e, j + 1).cast("double")
-                for j in range(len(qvec))
-            ],
-        }
-
-    inter = []
-    for prefix, terms in chunk_sets.items():
-        for i in range(0, len(terms), _CODEGEN_CHUNK):
-            inter.append(_tree_sum(terms[i : i + _CODEGEN_CHUNK]).alias(f"{prefix}{i}"))
-    step1 = df.select(*cols, *inter)
-
-    def total(prefix: str, n: int) -> Column:
-        return _tree_sum([F.col(f"{prefix}{i}") for i in range(0, n, _CODEGEN_CHUNK)])
-
-    if metric in ("l2", "dot"):
-        raw = total("_d", len(qvec))
-    else:
-        import math
-
-        qnorm = math.sqrt(sum(float(x) * float(x) for x in qvec))
-        denom = F.sqrt(total("_n", len(qvec))) * F.lit(qnorm)
-        raw = F.when(denom != 0.0, total("_d", len(qvec)) / denom)
-    return step1.select(*cols, raw.alias("_raw"))
 
 
 def _scale_rows(mat, scales):
@@ -319,18 +239,18 @@ def _arrow_scored(
     flattened zero-copy into an (n, dim) matrix per batch.
     """
     import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
 
     from laion_spark.session import _ship_package
 
     _ship_package(df.sparkSession)
 
+    # columns are addressed by position (the vector is last), so a
+    # select that also names the vector column stays unambiguous
     pruned = df.select(*cols, vector_col)
-    out_fields = [pruned.schema[c] for c in cols]
-    out_schema = (
-        ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in out_fields) + ", _raw double"
-        if out_fields
-        else "_raw double"
-    )
+    nc = len(cols)
+    out_schema = StructType(pruned.schema.fields[:nc] + [StructField("_raw", DoubleType())])
+    names = list(cols) + ["_raw"]
     dim = len(qvec)
 
     def score(batches):
@@ -340,19 +260,18 @@ def _arrow_scored(
         q = np.asarray(qvec, dtype=np.float64)
         qq = float(q @ q)
         for rb in batches:
-            vcol = rb.column(rb.schema.get_field_index(vector_col))
+            vcol = rb.column(nc)
             if vcol.null_count:
                 # NULL embeddings score NULL (ranked last by the shared
-                # finishing tail) — same contract as the codegen/hof
-                # paths, instead of flat_matrix's hard error
+                # finishing tail) — same contract as the hof path,
+                # instead of flat_matrix's hard error
                 mask = vcol.is_valid()
                 null_rb = rb.filter(pc.invert(mask))
                 if len(null_rb):
-                    arrays = [null_rb.column(null_rb.schema.get_field_index(c)) for c in cols]
-                    arrays.append(pa.nulls(len(null_rb), pa.float64()))
-                    yield pa.RecordBatch.from_arrays(arrays, list(cols) + ["_raw"])
+                    arrays = null_rb.columns[:nc] + [pa.nulls(len(null_rb), pa.float64())]
+                    yield pa.RecordBatch.from_arrays(arrays, names)
                 rb = rb.filter(mask)
-                vcol = rb.column(rb.schema.get_field_index(vector_col))
+                vcol = rb.column(nc)
             n = len(vcol)
             if n == 0:
                 continue
@@ -368,9 +287,8 @@ def _arrow_scored(
                 norms = np.sqrt(np.einsum("ij,ij->i", mat, mat)) * np.sqrt(qq)
                 with np.errstate(divide="ignore", invalid="ignore"):
                     raw = np.where(norms != 0.0, (mat @ q) / norms, np.nan)
-            arrays = [rb.column(rb.schema.get_field_index(c)) for c in cols]
-            arrays.append(pa.array(raw, type=pa.float64()))
-            yield pa.RecordBatch.from_arrays(arrays, list(cols) + ["_raw"])
+            arrays = rb.columns[:nc] + [pa.array(raw, type=pa.float64())]
+            yield pa.RecordBatch.from_arrays(arrays, names)
 
     scored = pruned.mapInArrow(score, out_schema)
     if metric == "cosine":
@@ -579,8 +497,7 @@ def knn_search_parquet(
     workers reopen their splits against the pickled FileSystem, and
     remote reads pre-buffer (coalesced ranges) since object-store
     latency dominates small reads. Spark-SQL string filters belong in
-    the codegen/arrow paths; this path takes predicates as
-    ``pa_filter``.
+    ``knn_search``; this path takes predicates as ``pa_filter``.
 
     ``path`` may be a list of directories — that is the ANN hook: an
     index layer (e.g. IVFIndex partition dirs, ``ivf_cluster=K``)
@@ -757,7 +674,7 @@ def knn_search_parquet(
                         # no f64 copy of the batch — ~11x the f64 direct
                         # pass), then EXACT float64 rescore of the
                         # candidates in the same direct sum((a-q)^2) form
-                        # as the oracle/codegen paths. The candidate set
+                        # as the oracle/knn_search paths. The candidate set
                         # provably contains the true top-k: every row
                         # whose f32 score is within 2*eps of the f32 k-th
                         # is kept, where eps is the standard forward-error

@@ -9,9 +9,12 @@ interchangeable operands of the same distance.
 
 Lifecycle per query (replaces the reference's SQL f-string codegen,
 search.py:20-26):
-    encode (driver, once) -> Column expression tree -> Catalyst
-    (parse the filter string, prune, push down) ->
+    encode (driver, once; concept math folds to one literal vector) ->
+    a fixed-size plan: parquet scan (pruned columns, pushed filter) ->
+    one ``mapInArrow`` numpy scorer holding the query vector ->
     TakeOrderedAndProject(k) -> collect k rows.
+The plan does not grow with dim, so a new query vector costs no
+Catalyst/Janino recompile (knn.py module docstring has the numbers).
 Stats mirror the reference's ``query_time``/``generation_time``
 (results.html:176-188, search.py:35,43-45).
 """

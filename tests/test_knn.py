@@ -54,7 +54,7 @@ def test_knn_l2_null_embedding_ranks_last(spark, emb):
     with_null = emb.select("vec_id", "embedding").unionAll(
         spark.sql("SELECT -1 AS vec_id, CAST(NULL AS array<float>) AS embedding")
     )
-    for impl in ("codegen", "hof"):
+    for impl in ("auto", "hof"):
         out = knn_search(
             with_null, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"], impl=impl
         ).collect()
@@ -64,7 +64,7 @@ def test_knn_l2_null_embedding_ranks_last(spark, emb):
 
 def test_knn_parquet_scan_parity(spark, emb, sf_dir):
     """The scan-side Arrow+BLAS scorer (bench fast lane) reproduces the
-    codegen path exactly at the round(6) grain, all metrics."""
+    DataFrame lane exactly at the round(6) grain, all metrics."""
     from laion_spark.operators.knn import knn_search_parquet
 
     path = f"{sf_dir}/embeddings.parquet"
@@ -98,7 +98,7 @@ def test_knn_parquet_scan_multi_row_groups(spark, emb, tmp_path):
 
 def test_knn_parquet_scan_filter_pushdown(spark, emb, sf_dir):
     """pa_filter pushes the predicate into the Arrow reader (row-group
-    stats skip + vectorized residual) and must equal the codegen path
+    stats skip + vectorized residual) and must equal the DataFrame lane
     with the same Spark filter."""
     import pyarrow.compute as pc
 
@@ -176,8 +176,8 @@ def test_knn_parquet_scan_nan_element_does_not_drop_batch(spark, tmp_path):
 
 
 def test_knn_arrow_impl_null_embedding_scores_null(spark, emb):
-    """impl=arrow must match the codegen/hof NULL contract: NULL
-    embeddings get a NULL score ranked last, not a hard error."""
+    """impl=arrow must match the hof NULL contract: NULL embeddings
+    get a NULL score ranked last, not a hard error."""
     with_null = emb.select("vec_id", "embedding").unionAll(
         spark.sql("SELECT -1 AS vec_id, CAST(NULL AS array<float>) AS embedding")
     )
@@ -186,9 +186,74 @@ def test_knn_arrow_impl_null_embedding_scores_null(spark, emb):
     ).collect()
     assert all(r.vec_id != -1 for r in out)
     ref = knn_search(
-        with_null, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"], impl="codegen"
+        with_null, QVEC, k=10, vector_col="embedding", select=["vec_id"], tiebreak=["vec_id"], impl="hof"
     ).collect()
     assert [(r.vec_id, round(r.score, 6)) for r in out] == [(r.vec_id, round(r.score, 6)) for r in ref]
+
+
+def test_knn_auto_is_arrow_for_literal_and_matches_hof(spark, emb):
+    """The default scorer for a literal vector is the Arrow one, and it
+    equals the HOF twin at the round(6) grain for every metric, with a
+    filter and with the vector column itself in the select."""
+    for metric in ("l2", "cosine", "dot"):
+        kw = dict(
+            k=10, vector_col="embedding", filter="label <> 3", select=["vec_id", "embedding"],
+            tiebreak=["vec_id"], metric=metric,
+        )
+        auto = knn_search(emb, QVEC, **kw)
+        assert "MapInArrow" in auto._jdf.queryExecution().executedPlan().toString()
+        got = [(r.vec_id, r.embedding, round(r.score, 6)) for r in auto.collect()]
+        want = [(r.vec_id, r.embedding, round(r.score, 6)) for r in knn_search(emb, QVEC, impl="hof", **kw).collect()]
+        assert got == want, metric
+
+
+def test_knn_rejects_unknown_impl(spark, emb):
+    """A retired or misspelled scorer name must fail loudly, not fall
+    through silently to the slower HOF path."""
+    for impl in ("codegen", "scan", "Arrow"):
+        with pytest.raises(ValueError, match="'auto', 'arrow', 'hof'"):
+            knn_search(emb, QVEC, k=3, vector_col="embedding", select=["vec_id"], impl=impl)
+    with pytest.raises(ValueError, match="literal query vector"):
+        knn_search(emb, F.col("embedding"), k=3, vector_col="embedding", select=["vec_id"], impl="arrow")
+
+
+def test_search_text_filtered_matches_hof(spark, emb):
+    """search_text with a filter (the DataFrame lane the CLI routes
+    filtered queries to) equals the HOF scorer on the same vector."""
+    from laion_spark.functions.encoder import HashEncoder
+    from laion_spark.operators.search import search_text
+
+    enc = HashEncoder(64)
+    text = "a sleepy ridgeback dog"
+    got = search_text(
+        emb, text, enc, k=7, filter="label = 3", select=["vec_id", "label"],
+        vector_col="embedding", tiebreak=["vec_id"],
+    ).rows
+    want = knn_search(
+        emb, enc.encode(text), k=7, vector_col="embedding", filter="label = 3",
+        select=["vec_id", "label"], tiebreak=["vec_id"], impl="hof",
+    ).collect()
+    assert len(got) == 7 and all(r.label == 3 for r in got)
+    assert [(r.vec_id, round(r.score, 6)) for r in got] == [(r.vec_id, round(r.score, 6)) for r in want]
+
+
+def test_search_concept_matches_hof(spark, emb):
+    """Concept math folds to one literal vector driver-side; the
+    default scorer over it equals the HOF scorer."""
+    from laion_spark.functions.encoder import HashEncoder
+    from laion_spark.operators.search import search_concept
+    from laion_spark.plans.concept import eval_concept
+
+    enc = HashEncoder(64)
+    expr = "('sleepy dog' - cat) + 1"
+    got = search_concept(
+        emb, expr, enc, k=5, select=["vec_id"], vector_col="embedding", tiebreak=["vec_id"]
+    ).rows
+    want = knn_search(
+        emb, eval_concept(expr, enc), k=5, vector_col="embedding", select=["vec_id"],
+        tiebreak=["vec_id"], impl="hof",
+    ).collect()
+    assert [(r.vec_id, round(r.score, 6)) for r in got] == [(r.vec_id, round(r.score, 6)) for r in want]
 
 
 def test_flat_matrix_guards():

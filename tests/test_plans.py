@@ -53,22 +53,24 @@ def test_knn_scan_prunes_unused_columns(emb):
     assert rs and "label" not in rs[0], rs
 
 
-def test_knn_codegen_path_has_no_python_node(emb):
-    """The default literal-vector scorer is JVM-only: no
-    ArrowEvalPython / MapInArrow / BatchEvalPython operator anywhere."""
-    p = plan_str(knn_search(emb, QVEC64, k=10, vector_col="embedding", select=["vec_id"]))
-    for marker in ("Python", "MapInArrow", "ArrowEval"):
-        assert marker not in p, f"{marker} found in plan:\n{p}"
-
-
-def test_knn_codegen_wholestage_compiles(emb):
-    """The unrolled chunked score must land inside WholeStageCodegen
-    subtrees (interpreted fallback would be silent and ~10x slower)."""
+def test_knn_literal_query_is_one_arrow_scorer(emb):
+    """A literal query vector is scored by ONE MapInArrow between the
+    pruned, filter-pushed scan and TakeOrderedAndProject. No
+    ``element_at`` anywhere: the plan must not grow with dim (an
+    unrolled per-element score cost seconds of planning per query)."""
     p = plan_str(
-        knn_search(emb, QVEC64, k=10, vector_col="embedding", select=["vec_id"]), mode="codegen"
+        knn_search(emb, QVEC64, k=10, vector_col="embedding", filter="vec_id > 5", select=["vec_id"])
     )
-    assert "WholeStageCodegen" in p
-    assert "Found 0 WholeStageCodegen" not in p
+    assert "element_at" not in p
+    tree = p.split("\n\n")[0]  # the operator tree, before the per-node details
+    assert tree.count("MapInArrow") == 1, p
+    take, arrow, scan = (tree.index(m) for m in ("TakeOrderedAndProject", "MapInArrow", "Scan parquet"))
+    assert take < arrow < scan, p  # formatted plans list the root first
+    scan_detail = p[p.index("Scan parquet", len(tree)):]
+    push = [ln for ln in scan_detail.splitlines() if "PushedFilters" in ln]
+    assert push and "vec_id" in push[0], push
+    rs = [ln for ln in scan_detail.splitlines() if "ReadSchema" in ln]
+    assert rs and "label" not in rs[0] and "embedding" in rs[0], rs
 
 
 def test_small_dim_join_broadcasts(spark, sf_dir):
