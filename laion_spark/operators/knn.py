@@ -133,7 +133,7 @@ def _finish_topk(
     return topk.withColumn(score_col, finish).drop("_raw")
 
 
-def _scale_rows(mat, scales):
+def _scale_rows_inplace(mat, scales):
     """Per-row dequantize ``mat * scales[:, None]`` IN PLACE when the
     matrix owns its buffer (r15, guide §5): an SQ8/f16 source always
     decodes through an ``astype`` copy (owned, writeable), so mutating
@@ -682,7 +682,7 @@ def knn_search_parquet(
                         # (|fl(x.y) - x.y| <= ~n*u*sum|x_i y_i|).
                         mat32 = flat_matrix(vcol, dim, np.float32)
                         if scales is not None:  # SQ8 dequantize: codes * scale
-                            mat32 = _scale_rows(mat32, scales)
+                            mat32 = _scale_rows_inplace(mat32, scales)
                         q32 = q.astype(np.float32)
                         nrm = np.einsum("ij,ij->i", mat32, mat32, dtype=np.float32)
                         raw32 = nrm - 2.0 * (mat32 @ q32) + np.float32(qq)
@@ -704,14 +704,14 @@ def knn_search_parquet(
                     elif metric == "dot":
                         mat = flat_matrix(vcol, dim)
                         if scales is not None:
-                            mat = _scale_rows(mat, scales)
+                            mat = _scale_rows_inplace(mat, scales)
                         raw = mat @ q
                         idx = pa.array(np.argpartition(-raw, top - 1)[:top])
                         raw = raw[idx.to_numpy()]
                     else:
                         mat = flat_matrix(vcol, dim)
                         if scales is not None:
-                            mat = _scale_rows(mat, scales)
+                            mat = _scale_rows_inplace(mat, scales)
                         norms = np.sqrt(np.einsum("ij,ij->i", mat, mat)) * np.sqrt(qq)
                         with np.errstate(divide="ignore", invalid="ignore"):
                             raw = np.where(norms != 0.0, (mat @ q) / norms, np.nan)

@@ -722,14 +722,14 @@ class IVFIndex:
         against a 100M-row corpus).
 
         ``chunk_queries=True`` lifts the ``max_queries`` cap the same
-        way ``knn_join`` does (r10): the query side is pulled through
-        the driver in blocks of ``max_queries``, each block runs its
-        own routed join (bytes still bounded by that block's probed
-        clusters), and the per-block top-k results are unioned — exact
-        relative to the unchunked join because every query's neighbors
-        are computed entirely within its own block. As with
-        ``knn_join``, chunking bounds per-task closure bytes, not
-        driver-resident query bytes: the lazy union closes over every
+        way ``knn_join`` does (r10): the query side is split into blocks
+        of ``max_queries``, each block runs its own routed join (bytes
+        still bounded by that block's probed clusters), and the
+        per-block top-k results are unioned — exact relative to the
+        unchunked join because every query's neighbors are computed
+        entirely within its own block. Chunking bounds per-task closure
+        bytes, not driver-resident query bytes: the query side is
+        collected once as Arrow, and the lazy union closes over every
         block's matrix, so batches beyond driver memory must persist
         per-block results as separate jobs (ADVICE r10).
 
@@ -754,59 +754,43 @@ class IVFIndex:
         from laion_spark.session import _ship_package
 
         _ship_package(spark)
-        if chunk_queries:
-            src = queries.select(query_id, query_vec)
-            qid_t_c = queries.schema[query_id].dataType.simpleString()
-
-            def block_plan(blk: list) -> DataFrame:
-                # r14: plan straight from the collected Rows — the old
-                # createDataFrame(blk) round-tripped every block through
-                # a LocalRelation only for the recursive call to collect
-                # it again (one extra Spark job per block, pure fixed
-                # overhead on the serving path)
-                return self._knn_join_parquet_rows(
-                    spark, path, blk, qid_t_c, k=k, query_id=query_id,
-                    corpus_id=corpus_id, vector_col=vector_col, metric=metric,
-                    nprobe=nprobe, scale_col=scale_col, _ordered=False,
-                )
-
-            # plan each block as its rows arrive so raw Rows are
-            # condensed to the routed-join closure before the next
-            # block is pulled (ADVICE r10)
-            parts: list[DataFrame] = []
-            buf: list = []
-            for r in src.toLocalIterator():
-                buf.append(r)
-                if len(buf) >= max_queries:
-                    parts.append(block_plan(buf))
-                    buf = []
-            if buf:
-                parts.append(block_plan(buf))
-            if not parts:
-                raise ValueError("queries DataFrame is empty")
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out.orderBy(query_id + "_q", "score", corpus_id + "_c")
-        q_rows = queries.select(query_id, query_vec).limit(max_queries + 1).collect()
-        if len(q_rows) > max_queries:
+        # one job: toArrow runs the limit as a single shuffle-to-one
+        # stage, where collect() of a limit (CollectLimit) scans one
+        # partition first and then the rest as a second job
+        src = queries.select(query_id, query_vec)
+        q_tbl = (src if chunk_queries else src.limit(max_queries + 1)).toArrow()
+        if q_tbl.num_rows > max_queries and not chunk_queries:
             raise ValueError(
                 f"queries side exceeds max_queries={max_queries}; batch the query "
                 "set (chunk_queries=True) or raise max_queries deliberately"
             )
-        if not q_rows:
+        if not q_tbl.num_rows:
             raise ValueError("queries DataFrame is empty")
-        return self._knn_join_parquet_rows(
-            spark, path, q_rows, queries.schema[query_id].dataType.simpleString(),
-            k=k, query_id=query_id, corpus_id=corpus_id, vector_col=vector_col,
-            metric=metric, nprobe=nprobe, scale_col=scale_col,
-        )
+        from laion_spark.operators.knn import flat_matrix
 
-    def _knn_join_parquet_rows(
+        q_ids = q_tbl.column(0).to_pylist()
+        # float64 (n, dim); raises on a NULL or wrong-length query vector
+        q_mat = flat_matrix(q_tbl.column(1).combine_chunks(), self.dim)
+        qid_t = queries.schema[query_id].dataType.simpleString()
+        parts = [
+            self._knn_join_parquet_block(
+                spark, path, q_ids[i:i + max_queries], q_mat[i:i + max_queries], qid_t,
+                k=k, query_id=query_id, corpus_id=corpus_id, vector_col=vector_col,
+                metric=metric, nprobe=nprobe, scale_col=scale_col,
+            )
+            for i in range(0, len(q_ids), max_queries)
+        ]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out.orderBy(query_id + "_q", "score", corpus_id + "_c")
+
+    def _knn_join_parquet_block(
         self,
         spark,
         path: str,
-        q_rows: list,
+        q_ids: list,
+        q_mat,
         qid_t: str,
         k: int = 10,
         query_id: str = "id",
@@ -815,21 +799,12 @@ class IVFIndex:
         metric: str = "l2",
         nprobe: int | None = None,
         scale_col: str | None = None,
-        _ordered: bool = True,
     ) -> DataFrame:
-        """One ``knn_join_parquet`` block over already-collected query
-        Rows — shared by the capped single-block path and each
-        ``chunk_queries`` block (which hands its ``toLocalIterator``
-        buffer here directly instead of round-tripping it through a
-        LocalRelation; ``_ordered=False`` skips the per-block global
-        sort the union's final orderBy would redo anyway)."""
+        """One ``knn_join_parquet`` block: the per-query top-k of the
+        queries ``q_ids`` / ``q_mat`` (float64, one row per id), unsorted
+        — the caller unions the blocks and sorts once. ``q_mat`` rides
+        the task closure as one compact buffer."""
         import numpy as np
-
-        q_ids = [r[0] for r in q_rows]
-        # compact ndarray: a list-of-lists of 4096 x 768 Python floats
-        # pickles to tens of MB in the task closure and would rebuild
-        # per task; the array pickles as one buffer
-        q_mat = np.asarray([list(map(float, r[1])) for r in q_rows], dtype=np.float64)
 
         # driver-side routing: cluster -> query indices. Vectorized (r14):
         # one (queries x centroids) distance matrix via the dot identity
@@ -1038,8 +1013,13 @@ class IVFIndex:
             F.col("score").asc_nulls_last() if asc else F.col("score").desc_nulls_last(),
             F.col("cid").asc(),
         )
-        out = (
-            partial.withColumn("_rn", F.row_number().over(w))
+        # the partials are O(splits x queries x k) rows: gather them into
+        # one partition, which satisfies both the window's clustering and
+        # the caller's orderBy — no hash exchange, no range-partition
+        # sampling job
+        return (
+            partial.repartition(1)
+            .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= k)
             .select(
                 F.col("qid").alias(query_id + "_q"),
@@ -1047,9 +1027,6 @@ class IVFIndex:
                 F.round("score", 6).alias("score"),
             )
         )
-        if _ordered:
-            out = out.orderBy(query_id + "_q", "score", corpus_id + "_c")
-        return out
 
     # -- search ----------------------------------------------------------
 

@@ -387,31 +387,31 @@ def test_knn_parquet_task_table_fallback(spark, sf_dir, monkeypatch):
 
 
 def test_scale_rows_inplace_and_view_fallback():
-    """r15: _scale_rows must multiply in place ONLY for owned writeable
-    matrices (SQ8/f16 astype copies) and fall back to allocating for
-    zero-copy views, with identical values either way."""
+    """r15: _scale_rows_inplace must multiply in place ONLY for owned
+    writeable matrices (SQ8/f16 astype copies) and fall back to
+    allocating for zero-copy views, with identical values either way."""
     import numpy as np
 
-    from laion_spark.operators.knn import _scale_rows
+    from laion_spark.operators.knn import _scale_rows_inplace
 
     scales = np.asarray([0.5, 2.0, 1.5], dtype=np.float32)
     # mirror the decode path's shape: reshape THEN astype, so the
     # resulting matrix owns its buffer (a bare reshape is a view)
     owned = np.arange(12, dtype=np.int8).reshape(3, 4).astype(np.float32)
     want = owned * scales[:, None]
-    got = _scale_rows(owned, scales)
+    got = _scale_rows_inplace(owned, scales)
     assert got is owned  # mutated in place, no second temporary
     assert np.array_equal(got, want)
 
     base = np.arange(12, dtype=np.float32).reshape(3, 4)
     base.setflags(write=False)
     view = base[:]
-    got2 = _scale_rows(view, scales)
+    got2 = _scale_rows_inplace(view, scales)
     assert got2 is not view  # read-only view: allocating fallback
     assert np.array_equal(got2, want)
     assert np.array_equal(base, np.arange(12, dtype=np.float32).reshape(3, 4))
 
     owned64 = np.arange(12, dtype=np.int8).reshape(3, 4).astype(np.float64)
-    got3 = _scale_rows(owned64, scales)
+    got3 = _scale_rows_inplace(owned64, scales)
     assert got3.dtype == np.float64
     assert np.array_equal(got3, np.arange(12).reshape(3, 4) * scales.astype(np.float64)[:, None])

@@ -923,3 +923,25 @@ def test_v14_rrf_legs_are_take_ordered(spark, sf_dir):
     for name in ["t22_tfidf_top_terms", "t23_bm25_rank", "t24_bpe_learn_merges"]:
         q = plan_str(REGISTRY[name].fn(spark, sf_dir), "simple")
         assert "Python" not in q, (name, q)
+
+
+def test_ivf_knn_join_parquet_top_k_is_one_exchange(spark, emb, tmp_path):
+    """The batched ANN join gathers its small partial (qid, cid, score)
+    rows into ONE partition: that satisfies both the per-query
+    row_number window and the final orderBy, so there is no hash
+    exchange and no range-partition sampling job."""
+    from laion_spark.operators.similarity import IVFIndex
+
+    idx = IVFIndex(dim=64, n_clusters=4, n_iters=1, nprobe=2).fit(
+        emb, id_col="vec_id", vector_col="embedding"
+    )
+    path = str(tmp_path / "ivf_join_plan")
+    idx.write_index(emb, path, "embedding")
+    q = emb.filter("vec_id < 5").select("vec_id", "embedding")
+    p = plan_str(idx.knn_join_parquet(
+        spark, path, q, k=3, query_id="vec_id", query_vec="embedding",
+        corpus_id="vec_id", vector_col="embedding",
+    ), "simple")
+    assert p.count("Exchange SinglePartition") == 1, p
+    assert "rangepartitioning" not in p, p
+    assert "hashpartitioning" not in p, p

@@ -346,6 +346,32 @@ def test_ivf_knn_join_parquet_query_cap(spark, emb, tmp_path):
                              vector_col="embedding", max_queries=5)
 
 
+def test_ivf_knn_join_parquet_null_query_vector_raises(spark, emb, tmp_path):
+    """A NULL query vector is an error, capped or chunked — never a
+    silently dropped or misaligned query."""
+    from pyspark.sql import functions as F
+
+    from laion_spark.operators.similarity import IVFIndex
+
+    import pytest
+
+    idx = IVFIndex(dim=64, n_clusters=4, n_iters=1, nprobe=2).fit(
+        emb, id_col="vec_id", vector_col="embedding"
+    )
+    path = str(tmp_path / "ivf_nullq")
+    idx.write_index(emb, path, "embedding")
+    q = emb.filter("vec_id < 4").select(
+        "vec_id",
+        F.when(F.col("vec_id") == 2, F.lit(None)).otherwise(F.col("embedding")).alias("embedding"),
+    )
+    for chunk, cap in ((False, 4), (True, 3)):
+        with pytest.raises(ValueError, match="NULL"):
+            idx.knn_join_parquet(spark, path, q, k=2, query_id="vec_id",
+                                 query_vec="embedding", corpus_id="vec_id",
+                                 vector_col="embedding", max_queries=cap,
+                                 chunk_queries=chunk)
+
+
 def test_expand_bucket_pairs_degenerate_bucket_streams(spark):
     """One bucket with 2,000 colliding ids must expand to exactly
     C(2000,2) pairs without materializing a ~2M-element array cell in
